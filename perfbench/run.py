@@ -290,9 +290,10 @@ def _job_layers(kind: str, wall: float, tasks: list[dict],
     for t in tasks:
         for k, v in t.items():
             tot[k] = tot.get(k, 0) + v
-    tot["n_tasks"] = len(tasks)
+    # a traced job that wrote no task spans fails the accounting check
     tot["max_accounting_error"] = max(
-        (t["accounting_error"] / t["task"] for t in tasks), default=0.0)
+        (t["accounting_error"] / t["task"] for t in tasks),
+        default=float("inf"))
     for sid, name, t0, t1, parent, thread, info in driver_spans:
         tot[f"driver.{name}"] = tot.get(f"driver.{name}", 0) + (t1 - t0)
     driver_s = tot.get("driver.sources.plan", 0) + tot.get(
@@ -307,7 +308,6 @@ def _job_layers(kind: str, wall: float, tasks: list[dict],
     longest = max(task_walls, default=0.0)
     tot["spark_overhead"] = wall - driver_s - longest
     tot["task_skew"] = (longest / median(task_walls)) if task_walls else 1.0
-    tot["wall"] = wall
     return tot
 
 

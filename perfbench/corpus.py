@@ -18,8 +18,10 @@ tokens moved the encode wall by up to 14% between seeds at local[1].
 
 A corpus is written once per (kind, seed, tokens) as parquet under the
 cache directory, with ``corpus.json`` (sizes and counts) written last
-as the completion marker. The cache holds one corpus: building another
-replaces it, so a series of seeds does not fill the disk.
+as the completion marker. The cache holds one corpus of each kind:
+building another replaces the one of its kind, so a series of seeds
+does not fill the disk, and runs that alternate the mixed and the
+incompressible workloads do not rebuild each other's corpus.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ import json
 import os
 import shutil
 from concurrent.futures import ProcessPoolExecutor
-from multiprocessing import get_context
+from multiprocessing import get_context, resource_tracker
 
 import numpy as np
 
@@ -129,7 +131,8 @@ def build(cache_dir: str, kind: str, seed: int,
         with open(marker) as fh:
             return out, json.load(fh)
     for d in os.listdir(cache_dir) if os.path.isdir(cache_dir) else []:
-        shutil.rmtree(os.path.join(cache_dir, d))
+        if d.startswith(kind + "-"):
+            shutil.rmtree(os.path.join(cache_dir, d))
     data = os.path.join(out, "data")
     os.makedirs(data)
     free = shutil.disk_usage(data).free
@@ -156,6 +159,10 @@ def build(cache_dir: str, kind: str, seed: int,
                 keeps.append(keep)
         sizes = list(ex.map(_filter_part, map(part, range(len(keeps))),
                             keeps))
+    # the spawn pool started multiprocessing's resource tracker, which
+    # ignores SIGTERM and would otherwise outlive the caller: end it and
+    # wait for it
+    resource_tracker._resource_tracker._stop()
     n_tokens = sum(have.values())
     facts = {
         "kind": kind, "seed": seed, "n_docs": sum(map(sum, keeps)),

@@ -8,10 +8,10 @@ job API through its own session factory, ``engine.get_spark(cpus=...)``:
 ``sources.encode_parquet_dir_direct`` (split planning, Spark job, sink,
 manifest fold) and ``sources.decode_parquet_dir_summary`` (block scan,
 ``decode_block``, token arrays in the workers). An untraced run sets up
-SETUPS sessions one after another; each is warmed up and then runs its
-share of ``--seconds`` of timed rounds (an encode job, then decode jobs
-of its output). Throughputs are medians over all timed jobs, set-up
-time and worker memory medians over the sessions. Every run then gates
+SETUPS sessions one after another, each warmed up; the last one then
+runs ``--seconds`` of timed rounds (an encode job, then a decode job
+of its output). Throughputs are medians over all timed jobs, set-up time
+and worker memory medians over the sessions. Every run then gates
 the last encode output: each block is decoded in the driver and
 compared token for token with the corpus.
 
@@ -32,6 +32,7 @@ import json
 import os
 import shlex
 import shutil
+import signal
 import sys
 import tempfile
 import time
@@ -45,18 +46,23 @@ PROTOCOL = "perfbench/1"
 
 # sessions set up per run; setup_s is their median. The first also
 # starts the JVM; each costs about a fifth of a run, which is what
-# holds this at two
+# holds this at two. Only the last session runs timed jobs: in the
+# first the JVM is still compiling, and its jobs ran 10-30% slower
 SETUPS = 2
 # a timed round is one encode job and then DECODES_PER_ENCODE decode
-# jobs of its output (a decode job is about half as long as an encode
-# job and mostly fixed Spark cost, so it takes more samples to reach
-# the same steadiness); each session runs one round at least, and a
-# traced run MIN_TRACED traced rounds at least
-DECODES_PER_ENCODE = 2
+# jobs of its output; one, so that the encode median, the less steady
+# of the two within a run, gets as many samples as the decode median.
+# An untraced run times one round at least, and a traced run
+# MIN_TRACED traced rounds at least
+DECODES_PER_ENCODE = 1
 MIN_TRACED = 3
-# split planning unit: small against a task's share of the corpus, so
-# the byte-balanced planner evens out the tasks
-SPLIT_BYTES = 8 << 20
+# split planning unit: 1 byte makes every row group (128 docs) a unit
+# of its own, so the byte-balanced planner evens the
+# tasks out to within 2%; with 8 MiB units the largest task of a job
+# carried 3-13% more bytes than the mean, by seed
+SPLIT_BYTES = 1
+# prctl option from <linux/prctl.h>
+PR_SET_CHILD_SUBREAPER = 36
 
 
 @dataclass(frozen=True)
@@ -110,9 +116,21 @@ def stop_jvm() -> None:
     SparkContext._jvm = None
 
 
-def _worker_hwm_kb() -> list[int]:
-    """VmHWM of each of this process's PySpark worker processes (the
-    daemon and the workers it forked)."""
+def adopt_orphans() -> None:
+    """Make this process the subreaper of every process it starts: one
+    whose parent ends first (a PySpark daemon or worker once the JVM has
+    exited) is re-parented here instead of to init, so that
+    `stop_descendants` can still find it and wait for it."""
+    import ctypes
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        err = ctypes.get_errno()
+        raise OSError(err, f"prctl(PR_SET_CHILD_SUBREAPER): "
+                      f"{os.strerror(err)}")
+
+
+def _descendants() -> set[int]:
+    """Pids of every live process below this one."""
     parent = {}
     for d in os.listdir("/proc"):
         if d.isdigit():
@@ -126,8 +144,39 @@ def _worker_hwm_kb() -> list[int]:
     while frontier:
         frontier = {p for p, pp in parent.items() if pp in frontier} - mine
         mine |= frontier
+    return mine
+
+
+def stop_descendants(grace: float = 10.0) -> None:
+    """Stop every process below this one and wait until each has ended:
+    SIGTERM first, SIGKILL to what is left after `grace` seconds."""
+    deadline = time.monotonic() + grace
+    signalled: set[int] = set()
+    while True:
+        while True:  # reap the children that have ended
+            try:
+                if os.waitpid(-1, os.WNOHANG)[0] == 0:
+                    break
+            except ChildProcessError:
+                break
+        pids = _descendants()
+        if not pids:
+            return
+        late = time.monotonic() > deadline
+        for pid in pids if late else pids - signalled:
+            try:
+                os.kill(pid, signal.SIGKILL if late else signal.SIGTERM)
+            except ProcessLookupError:
+                pass
+        signalled |= pids
+        time.sleep(0.05)
+
+
+def _worker_hwm_kb() -> list[int]:
+    """VmHWM of each of this process's PySpark worker processes (the
+    daemon and the workers it forked)."""
     hwm = []
-    for pid in mine:
+    for pid in _descendants():
         try:
             with open(f"/proc/{pid}/cmdline", "rb") as fh:
                 if b"pyspark.daemon" not in fh.read():
@@ -419,6 +468,17 @@ def main(argv=None) -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
+    # every path out of a run stops and waits for all it started: the
+    # JVM, the PySpark daemon and workers, the corpus generators
+    adopt_orphans()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
+    try:
+        return _run(args)
+    finally:
+        stop_descendants()
+
+
+def _run(args) -> int:
     wl = WORKLOADS[args.workload]
     work = os.path.join(ROOT, ".perfbench_work")
     prepare_env(work, bool(args.trace))
@@ -436,9 +496,9 @@ def main(argv=None) -> int:
     setups = []
     hwm = []
     walls = {"encode": [], "decode": []}
-    # sessions: SETUPS in an untraced run, each with its share of the
-    # timed rounds, so set-up time, walls and worker memory are each
-    # sampled over several sessions; one in a traced run
+    # sessions: SETUPS in an untraced run, so set-up time and worker
+    # memory are each sampled over several sessions, and the timed
+    # rounds run in the last; one in a traced run
     sessions = 1 if args.trace else SETUPS
     try:
         for i in range(sessions):
@@ -451,7 +511,8 @@ def main(argv=None) -> int:
                 res = _measure_traced(runner, args.seconds, trace_root)
                 walls = res["walls"]
             else:
-                _measure(runner, args.seconds / sessions, walls)
+                if i == sessions - 1:
+                    _measure(runner, args.seconds, walls)
                 hwm.append(_worker_hwm_kb())
             runner.stop()
     finally:

@@ -39,6 +39,15 @@ def corrupt_one_block(out_dir: str) -> str:
 
 def main() -> int:
     sys.path.insert(0, ROOT)
+    from perfbench import run
+    run.adopt_orphans()
+    try:
+        return _selftest()
+    finally:
+        run.stop_descendants()
+
+
+def _selftest() -> int:
     from perfbench import corpus, gate, run
     work = os.path.join(ROOT, ".perfbench_work", "selftest")
     run.prepare_env(work, trace=False)

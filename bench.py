@@ -158,7 +158,7 @@ def encode_run(cpus: int, src_path: str, out_dir: str,
     use_files = os.environ.get("RLE_BENCH_TRANSPORT", "files") != "dataframe"
     # one task wave per core by default: the bench corpus has uniform
     # row groups, and every extra wave pays ~200 ms/task python-worker
-    # setup on this host (see sources._split_df)
+    # setup on this host (see sources._map_splits)
     n_tasks = cpus * int(os.environ.get("RLE_BENCH_TASKS_PER_CPU", "1"))
     spark = (make_spark(cpus, f"bench-encode-{cpus}"))
     spark.sparkContext.setLogLevel("ERROR")

@@ -26,11 +26,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .blocks import BLOCK_SCHEMA_DDL
+from .blocks import BLOCK_SCHEMA_DDL, DECODED_SCHEMA_DDL
 from .engine import EngineConfig, _encode_iter_factory, refresh_manifest
 
 _READ_COLUMNS = ["doc_id", "tokens", "source"]
-SPLIT_SCHEMA_DDL = "path string, rg0 int, rg1 int"
 
 # scan readahead depth (batches in flight); 0 disables the thread
 _READAHEAD_DEPTH = int(os.environ.get("RLE_SCAN_READAHEAD", "2"))
@@ -48,7 +47,9 @@ def _readahead(gen_fn, depth: int | None = None):
     the current one. Measured single-thread: 0.124 -> 0.214 GB/s
     pipeline encode (the scan was ~40% of the wall, BENCH.md). The
     bounded queue caps in-flight batches at `depth`; producer
-    exceptions re-raise in the consumer."""
+    exceptions re-raise in the consumer. A consumer that stops early
+    sets `stop`, so the producer gives up instead of blocking forever
+    on a full queue (a leaked thread inside a reused python worker)."""
     depth = _READAHEAD_DEPTH if depth is None else depth
     if depth <= 0:
         yield from gen_fn()
@@ -56,24 +57,39 @@ def _readahead(gen_fn, depth: int | None = None):
     import queue as _queue
     import threading
     q: _queue.Queue = _queue.Queue(maxsize=depth)
+    stop = threading.Event()
     _END, _ERR = object(), object()
+
+    def put(item) -> bool:
+        while not stop.is_set():
+            try:
+                q.put(item, timeout=0.05)
+                return True
+            except _queue.Full:
+                pass
+        return False
 
     def produce():
         try:
             for item in gen_fn():
-                q.put(item)
-            q.put(_END)
+                if not put(item):
+                    return
+            put(_END)
         except BaseException as e:  # noqa: BLE001 — relayed, not dropped
-            q.put((_ERR, e))
+            put((_ERR, e))
 
-    threading.Thread(target=produce, daemon=True).start()
-    while True:
-        item = q.get()
-        if item is _END:
-            return
-        if isinstance(item, tuple) and len(item) == 2 and item[0] is _ERR:
-            raise item[1]
-        yield item
+    threading.Thread(target=produce, name="rle-readahead",
+                     daemon=True).start()
+    try:
+        while True:
+            item = q.get()
+            if item is _END:
+                return
+            if isinstance(item, tuple) and len(item) == 2 and item[0] is _ERR:
+                raise item[1]
+            yield item
+    finally:
+        stop.set()
 
 
 def _balanced_contiguous_groups(units, n_tasks: int) -> list[list]:
@@ -125,39 +141,48 @@ def _balanced_contiguous_groups(units, n_tasks: int) -> list[list]:
     return groups
 
 
-def _split_df(spark: SparkSession, units, n_tasks: int | None) -> DataFrame:
-    """Distribute splits over FAT tasks (~3x cores by default): python
-    worker task setup costs ~200 ms on this host (measured: 32 tasks
-    added 6-8 s to a 3 s read at local[1]), and a real cluster also
-    wants a small multiple of total cores, not one task per row
-    group — each task loops over its list of splits.
+def _map_splits(spark: SparkSession, units, n_tasks: int | None, fn,
+                schema: str) -> DataFrame:
+    """One mapInArrow pass of `fn` over sized split units (from
+    plan_parquet_splits(with_bytes=True)), one task per byte-balanced
+    contiguous group — the stage wall is the slowest task, so task
+    bytes, not unit counts, must be equal. `fn` gets one
+    (path, rg0, rg1) batch per group; partition i reads group i.
 
-    Sized units (4-tuples from plan_parquet_splits(with_bytes=True))
-    get byte-balanced contiguous groups, one group per task — the
-    stage wall is the slowest task, so task bytes, not unit counts,
-    are what must be equal. Plain 3-tuple units keep the positional
-    parallelize slicing."""
+    Tasks are FAT (~3x cores by default): python worker task setup
+    costs ~200 ms on this host (measured: 32 tasks added 6-8 s to a
+    3 s read at local[1]), and a real cluster also wants a small
+    multiple of total cores, not one task per row group. The leaf is
+    JVM-native (spark.range: partition i holds the single id i, which
+    the task looks up in the plan its closure carries), so a task is
+    ONE python pass. A parallelize + createDataFrame split DataFrame
+    ran a second python pass per task; dropping it cut the fixed
+    per-job cost (job wall - plan - manifest - slowest task) from
+    0.83 to 0.45 s per encode job and 0.74 to 0.54 s per decode job
+    (perfbench mixed_p4 traced medians, local[4], 4-core host)."""
+    if not units:
+        return spark.createDataFrame([], schema)
     if n_tasks is None:
         n_tasks = max(1, spark.sparkContext.defaultParallelism * 3)
-    n_tasks = min(n_tasks, len(units))
-    sc = spark.sparkContext
-    if (units and len(units[0]) == 4
-            and os.environ.get("RLE_SPLIT_BALANCE", "1") != "0"):
-        groups = [[(p, g0, g1) for p, g0, g1, _ in g]
-                  for g in _balanced_contiguous_groups(units, n_tasks)]
-        # one group per partition: parallelize a list of exactly
-        # len(groups) elements with numSlices=len(groups), then
-        # flatten inside the partition — no shuffle, no repartition
-        rdd = sc.parallelize(groups, len(groups)).flatMap(lambda g: g)
-        return spark.createDataFrame(rdd, SPLIT_SCHEMA_DDL)
-    # deterministic contiguous slices via parallelize: no shuffle
-    # exchange stage (repartition scheduled a whole extra task wave
-    # per run), consecutive row groups stay in one task (read
-    # locality), and the task->splits assignment is a pure function of
-    # (units, n_tasks) — which the resume plan signature fingerprints
-    rows = [u[:3] for u in units]
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, n_tasks), SPLIT_SCHEMA_DDL)
+    groups = [[(p, g0, g1) for p, g0, g1, _ in g]
+              for g in _balanced_contiguous_groups(units, n_tasks)]
+
+    def it(id_batches):
+        import pyarrow as pa
+
+        def splits():
+            for rb in id_batches:
+                for i in rb.column("id").to_pylist():
+                    paths, rg0s, rg1s = zip(*groups[i])
+                    yield pa.record_batch(
+                        [pa.array(paths, pa.string()),
+                         pa.array(rg0s, pa.int32()),
+                         pa.array(rg1s, pa.int32())],
+                        names=["path", "rg0", "rg1"])
+        return fn(splits())
+
+    return (spark.range(len(groups), numPartitions=len(groups))
+            .mapInArrow(it, schema))
 
 
 def plan_parquet_splits(src_dir: str,
@@ -175,7 +200,7 @@ def plan_parquet_splits(src_dir: str,
     DataFrame (round-2 advice).
 
     with_bytes=True appends each unit's total row-group byte size as a
-    4th field — _split_df uses it to byte-balance the task groups."""
+    4th field — _map_splits uses it to byte-balance the task groups."""
     import pyarrow.parquet as pq
     units: list[tuple[str, int, int]] = []
     base = os.path.normpath(src_dir)
@@ -247,10 +272,8 @@ def encode_parquet_dir(spark: SparkSession, src_dir: str,
     cfg = cfg or EngineConfig(layout="mapside")
     units = plan_parquet_splits(src_dir, target_split_bytes,
                                 with_bytes=True)
-    if not units:
-        return spark.createDataFrame([], BLOCK_SCHEMA_DDL)
-    splits = _split_df(spark, units, n_tasks)
-    return splits.mapInArrow(_file_encode_iter(cfg), BLOCK_SCHEMA_DDL)
+    return _map_splits(spark, units, n_tasks, _file_encode_iter(cfg),
+                       BLOCK_SCHEMA_DDL)
 
 
 BLOCK_SUMMARY_DDL = ("block_id string, source string, bucket int, seq int, "
@@ -280,9 +303,7 @@ def encode_parquet_dir_summary(spark: SparkSession, src_dir: str,
 
     units = plan_parquet_splits(src_dir, target_split_bytes,
                                 with_bytes=True)
-    if not units:
-        return spark.createDataFrame([], BLOCK_SUMMARY_DDL)
-    return _split_df(spark, units, n_tasks).mapInArrow(it, BLOCK_SUMMARY_DDL)
+    return _map_splits(spark, units, n_tasks, it, BLOCK_SUMMARY_DDL)
 
 
 def manifest_from_lineage(out_dir: str) -> bool:
@@ -396,22 +417,18 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
     if n_tasks is None:
         n_tasks = max(1, spark.sparkContext.defaultParallelism * 3)
     n_tasks = min(n_tasks, max(len(units), 1))
-    # defaultParallelism is part of the fingerprint: createDataFrame's
-    # initial slicing feeds the round-robin repartition, so the same
-    # (units, n_tasks) on a different-sized session yields a DIFFERENT
-    # task->split assignment — resuming across that would skip and
-    # duplicate splits silently. The FULL EngineConfig (selector
-    # effort/allow-list, parquet codec, layout, ...) is included too:
-    # resuming after any codec-affecting settings change must take the
-    # clean-rewrite path, not mix blocks encoded under two configs.
+    # Resume is sound only while task i re-reads exactly the splits its
+    # committed file holds: group i of _balanced_contiguous_groups(units,
+    # n_tasks). The "split_v3" tag versions that assignment function;
+    # bump it when it changes, so outputs written under another one take
+    # the clean-rewrite path. The FULL EngineConfig (selector effort/
+    # allow-list, parquet codec, layout, ...) is included too: a
+    # codec-affecting settings change must rewrite, not mix blocks
+    # encoded under two configs. defaultParallelism no longer affects
+    # the assignment; it stays so existing outputs keep their signature.
     import dataclasses as _dc
     plan_sig = hashlib.sha256(
-        json.dumps(["split_v3",  # task-assignment function version:
-                    # byte-balanced contiguous groups (v2: positional
-                    # parallelize slices; v1: round-robin repartition) —
-                    # outputs written under a different assignment must
-                    # take the clean-rewrite path
-                    units, n_tasks, _dc.asdict(cfg),
+        json.dumps(["split_v3", units, n_tasks, _dc.asdict(cfg),
                     spark.sparkContext.defaultParallelism],
                    sort_keys=True).encode()
     ).hexdigest()
@@ -590,30 +607,19 @@ def encode_parquet_dir_direct(spark: SparkSession, src_dir: str,
              (n_blocks, n_docs, n_tokens, orig, comp)],
             names=["n_blocks", "n_docs", "n_tokens", "orig", "comp"])
 
-    import time as _time
-    _t0 = _time.time()
-    if units:
-        splits = _split_df(spark, units, n_tasks)
-        totals = (splits.mapInArrow(
-            it, "n_blocks long, n_docs long, n_tokens long, "
-                "orig long, comp long")
-            .agg(F.sum("n_docs").alias("d"), F.sum("n_tokens").alias("t"),
-                 F.sum("orig").alias("o"), F.sum("comp").alias("c"))
-            .collect()[0])
-    else:
-        totals = {"d": 0, "t": 0, "o": 0, "c": 0}
-    _t1 = _time.time()
+    # one row per task, summed here: an .agg() would add a shuffle
+    # stage to the job only to add up n_tasks rows
+    rows = _map_splits(spark, units, n_tasks, it,
+                       "n_blocks long, n_docs long, n_tokens long, "
+                       "orig long, comp long").collect()
     if not manifest_from_lineage(out_dir):
         refresh_manifest(spark, out_dir)  # lineage gap: authoritative rescan
-    if os.environ.get("RLE_DEBUG_TIMING"):
-        import sys as _sys
-        print(f"direct: spark job {_t1 - _t0:.2f}s, manifest "
-              f"{_time.time() - _t1:.2f}s", file=_sys.stderr, flush=True)
-    orig, comp = int(totals["o"] or 0), int(totals["c"] or 0)
+    orig = sum(r["orig"] for r in rows)
+    comp = sum(r["comp"] for r in rows)
     return {"orig_bytes": orig, "comp_bytes": comp,
             "ratio": (comp / orig) if orig else 1.0,
-            "n_tokens": int(totals["t"] or 0),
-            "n_docs": int(totals["d"] or 0)}
+            "n_tokens": sum(r["n_tokens"] for r in rows),
+            "n_docs": sum(r["n_docs"] for r in rows)}
 
 
 def decode_parquet_dir(spark: SparkSession, out_dir: str,
@@ -640,11 +646,7 @@ def decode_parquet_dir(spark: SparkSession, out_dir: str,
 
     units = plan_parquet_splits(os.path.join(out_dir, "blocks"),
                                 with_bytes=True)
-    if not units:
-        from .blocks import DECODED_SCHEMA_DDL
-        return spark.createDataFrame([], DECODED_SCHEMA_DDL)
-    from .blocks import DECODED_SCHEMA_DDL
-    return _split_df(spark, units, n_tasks).mapInArrow(it, DECODED_SCHEMA_DDL)
+    return _map_splits(spark, units, n_tasks, it, DECODED_SCHEMA_DDL)
 
 
 def decode_parquet_dir_summary(spark: SparkSession, out_dir: str,
@@ -690,10 +692,7 @@ def decode_parquet_dir_summary(spark: SparkSession, out_dir: str,
 
     units = plan_parquet_splits(os.path.join(out_dir, "blocks"),
                                 with_bytes=True)
-    if not units:
-        return spark.createDataFrame([], "n_docs long, n_tokens long")
-    return _split_df(spark, units, n_tasks).mapInArrow(
-        it, "n_docs long, n_tokens long")
+    return _map_splits(spark, units, n_tasks, it, "n_docs long, n_tokens long")
 
 
 def encode_parquet_dir_to_table(spark: SparkSession, src_dir: str,

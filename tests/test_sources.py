@@ -336,3 +336,70 @@ def test_readahead_order_errors_and_disable():
         for x in _readahead(boom):
             out.append(x)
     assert out == [1]
+
+
+def test_readahead_closed_early_stops_producer():
+    """A consumer closed after one item must not leave the producer
+    thread blocked on its full queue for the life of the worker."""
+    import itertools
+    import threading
+    from rle_spark.sources import _readahead
+
+    before = set(threading.enumerate())
+    g = _readahead(itertools.count, depth=1)
+    assert next(g) == 0
+    g.close()
+    started = set(threading.enumerate()) - before
+    for t in started:
+        t.join(timeout=2.0)
+    assert started and not any(t.is_alive() for t in started)
+
+
+def _plan_string(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_file_jobs_read_splits_from_a_range_leaf(spark, tmp_path_factory):
+    """The file-granular jobs are one python pass per task: a JVM
+    spark.range leaf feeds mapInArrow (no python-RDD split scan), the
+    direct encode job is a single stage (no aggregation shuffle), and
+    task i writes exactly group i of the byte-balanced plan — the
+    task->file mapping the resume fingerprint relies on."""
+    import json
+    from rle_spark.sources import (_balanced_contiguous_groups,
+                                   decode_parquet_dir_summary,
+                                   encode_parquet_dir_direct)
+    src = str(tmp_path_factory.mktemp("rsrc_shape"))
+    out = str(tmp_path_factory.mktemp("rout_shape"))
+    df = token_table(spark, 60, seed=31)
+    df.repartition(12).write.mode("overwrite").parquet(src)
+
+    plan = _plan_string(encode_parquet_dir(spark, src, CFG, n_tasks=5))
+    assert "Range" in plan and "ExistingRDD" not in plan
+
+    sc = spark.sparkContext
+    sc.setJobGroup("rle-direct-shape", "direct encode job shape")
+    try:
+        s = encode_parquet_dir_direct(spark, src, out, CFG,
+                                      target_split_bytes=1, n_tasks=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    stages = [st for j in tracker.getJobIdsForGroup("rle-direct-shape")
+              for st in tracker.getJobInfo(j).stageIds]
+    assert len(stages) == 1
+    assert s["n_docs"] == 60
+
+    units = plan_parquet_splits(src, target_bytes=1, with_bytes=True)
+    groups = _balanced_contiguous_groups(units, 5)
+    assert len(units) > len(groups) == 5
+    for i, grp in enumerate(groups):
+        with open(os.path.join(out, "lineage", f"part-{i:05d}.json")) as fh:
+            rec = json.load(fh)
+        assert rec["splits"] == [[p, g0, g1] for p, g0, g1, _ in grp]
+
+    dec = decode_parquet_dir_summary(spark, out, n_tasks=5)
+    plan = _plan_string(dec)
+    assert "Range" in plan and "ExistingRDD" not in plan
+    assert dec.agg(F.sum("n_docs")).collect()[0][0] == 60
